@@ -1,37 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
-/** The JIT-quiescence protocol shared by Bench's timed reps and ProbeQ's
-  * isolated adjudication readings — ONE implementation so the two can
-  * never drift apart (a protocol tune applied to only one of them would
-  * silently desynchronize the adjudication instrument from the numbers it
-  * adjudicates). */
-private[graft] object JitQuiesce {
-  def jitMillis(): Long = {
-    val c = java.lang.management.ManagementFactory.getCompilationMXBean
-    if (c != null && c.isCompilationTimeMonitoringSupported)
-      c.getTotalCompilationTime else -1L
-  }
-
-  /** Sleep until the compiler goes quiet (compilation-time delta < 15 ms
-    * over a 100 ms window; capped). Returns waited ms — spent only while
-    * the JIT is actually active, and always OUTSIDE timed regions. */
-  def await(capMs: Long = 3000L): Long = {
-    val start = System.nanoTime()
-    var prev = jitMillis()
-    if (prev < 0) return 0L // not monitorable on this JVM
-    var waited = 0L
-    var quiet = false
-    while (!quiet && waited < capMs) {
-      Thread.sleep(100)
-      waited = (System.nanoTime() - start) / 1000000L
-      val now = jitMillis()
-      quiet = now - prev < 15
-      prev = now
-    }
-    waited
-  }
-}
 
 /** Driver-run benchmark: every registered query timed at the given scale
   * factor; one JSON line on stdout. A small untimed warmup first so JVM/
@@ -41,17 +8,7 @@ private[graft] object JitQuiesce {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: stray WARN lines around the final JSON line can push
-    // it out of the harness's bounded output-tail capture.
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Harness.session()
     // warmup: JVM + codegen + parquet reader/footer init for EVERY table
     // (untimed) — otherwise whichever query alphabetically touches a table
     // first is charged its cold-read cost and per-query numbers aren't
@@ -72,124 +29,13 @@ object Bench {
     // reported number is the MEDIAN (min also recorded in the detail
     // file) — single-VM noise was ±20% with one rep, which made per-query
     // regressions undiagnosable across rounds (see BENCH_HISTORY.md).
-    val reps = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_REPS", "3").trim.toInt)
-      .getOrElse(3).max(1)
-    // Materialize FULL rows of the query's own plan (toRdd.count), not
-    // df.count(): count() plans a new aggregate through which Catalyst
-    // prunes every unconsumed column — a projection-heavy query could
-    // "run" without ever evaluating its payload expressions (quality_gate
-    // measured 0.3s under count() vs ~6s when its output was actually
-    // consumed; found via the r06 curation_e2e investigation). toRdd
-    // executes the exact optimized plan and writes every output column
-    // into UnsafeRows, which is what a real consumer pays. (r06 protocol
-    // change — see BENCH_HISTORY.md.)
-    def run(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    // Reset cross-query state so every query is timed from the same
-    // block-manager baseline (r07 protocol; see BENCH_HISTORY.md).
-    // Builder-side localCheckpoints (CC loops, layout pins) leave their
-    // blocks pinned until the ContextCleaner's next GC-driven sweep, so in
-    // a 164-query sequential run the late-alphabet dedup/CC/vector family
-    // inherited up to 163 predecessors' worth of retained blocks — the
-    // likely cause of the r06 driver-bench 5.6x on knn_q8_rescore while
-    // the same commit ran 0.4s in isolation. Unpersist synchronously,
-    // clear any cached plans, drop leaked spark.graft.* optimizer knobs,
-    // and give the cleaner one GC tick; all of it OUTSIDE the timed reps.
-    def resetState(): Unit = {
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        spark.conf.getAll.keys.filter(_.startsWith("spark.graft."))
-          .foreach(spark.conf.unset)
-        System.gc()
-      } catch { case _: Throwable => }
-    }
-    // JVM self-diagnosis (r08): the r07 driver bench showed 25-30x
-    // in-context inflation on interpreted-expression-heavy queries
-    // (doc_winnowing 46.9s in the 253-query sequence vs 1.7s isolated) —
-    // the signature of a full JIT code cache (compilation stops, everything
-    // runs interpreted). Per query we record code-cache occupancy, the GC
-    // time delta, and the JIT compilation-time delta across the timed reps,
-    // so a driver-context pathology is identified by the detail file itself
-    // instead of needing a post-hoc rerun.
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    def codeCache(): (Long, Long) = {
-      val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.contains("CodeHeap") ||
-          p.getName.contains("CodeCache"))
-      (pools.map(_.getUsage.getUsed).sum, pools.map(_.getUsage.getMax).sum)
-    }
-    def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-    def jitMillis(): Long = JitQuiesce.jitMillis()
-    // r09 mitigation: the r08 counters proved the code cache never fills
-    // (146 MB / 1 GB) but 490 s of cumulative JIT thread time still ran
-    // CONCURRENTLY with timed reps (e.g. 19.7 s of JIT inside a 4.4 s
-    // query) — on a saturated local[32] box the C2 threads steal cores from
-    // the rep being measured. So after each query's untimed warm run, wait
-    // until the compiler goes quiet (compilation-time delta < 15 ms over a
-    // 100 ms window; capped) before starting the timed reps. The wait is
-    // outside the timed region and only spends time while the JIT is
-    // actually active; per-query waited ms is recorded as jit_wait_ms.
-    // Protocol lives in JitQuiesce (shared with ProbeQ — see its scaladoc).
-    def awaitJitQuiescent(): Long = JitQuiesce.await()
-    def measure(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-      : (String, Double, Double, Seq[Double], Long, Long, Long, Long, Boolean) = {
-      resetState()
-      val jitBeforeWarm = jitMillis()
-      try { run(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-      var jitWaitMs = awaitJitQuiescent()
-      // compile-heavy queries (the r08 tail: 3-6 s of JIT thread time inside
-      // 1-2 s timed reps) get a SECOND untimed warm pass — the first one is
-      // what provokes the compilation, the second runs against the already-
-      // compiled methods, so the timed reps start from steady state
-      if (jitMillis() - jitBeforeWarm > 1000) {
-        try { run(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        jitWaitMs += awaitJitQuiescent()
-      }
-      val (gc0, jit0) = (gcMillis(), jitMillis())
-      // rawTimes keeps EXECUTION ORDER (r09 verdict #7: med/min spreads up
-      // to 2.7x inside driver runs were opaque — the detail file now shows
-      // whether rep 1 or rep 3 carries the inflation, i.e. leftover warmup
-      // vs. intermittent external contention)
-      def timedRep(): Double = {
-        val t0 = System.nanoTime()
-        try { run(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val firstReps = (1 to reps).map(_ => timedRep())
-      // Contention detector (r10 verdict #3): a rep spread > 1.5x over a
-      // non-trivial floor is the external-load signature the per-rep arrays
-      // exposed (r10 driver run: corr_spearman [3.70, 39.16, 3.37] — an
-      // 11.6x mid-rep spike with a stable min). Take up to 2 extra reps so
-      // the median is computed from a majority of uncontended readings;
-      // extras append to reps_s in execution order and the query is flagged
-      // "contended" in the detail file. The regression gate is unchanged —
-      // it runs on minima, which extra reps can only refine. The 0.15 s
-      // floor keeps sub-100 ms queries (where 1.5x is scheduler jitter, not
-      // contention) out of the rerun loop.
-      def spread(ts: Seq[Double]): Double =
-        if (ts.min > 1e-9) ts.max / ts.min else 1.0
-      val contended = firstReps.min > 0.15 && spread(firstReps) > 1.5
-      var rawTimes = firstReps
-      var extra = 0
-      while (extra < 2 && rawTimes.min > 0.15 && spread(rawTimes) > 1.5) {
-        rawTimes = rawTimes :+ timedRep()
-        extra += 1
-      }
-      val times = rawTimes.sorted
-      // true median: average the two middle elements when reps is even
-      // (times(n/2) alone would report the upper of the two)
-      val med =
-        if (times.size % 2 == 1) times(times.size / 2)
-        else (times(times.size / 2 - 1) + times(times.size / 2)) / 2
-      val (ccUsed, _) = codeCache()
-      (name, med, times.head, rawTimes,
-        ccUsed >> 20, gcMillis() - gc0, jitMillis() - jit0, jitWaitMs,
-        contended)
+    // The per-query protocol (reset, warm, JIT quiesce, timed reps,
+    // contention extras) is Harness.measure.
+    val reps = Harness.reps
+    val queries = SparkEntry.queries
+    def measure(name: String): Measurement = {
+      val fn = queries(name)
+      Harness.measure(spark, name, reps)(fn(spark, sfDir))
     }
     // Run order: SEEDED SHUFFLE, not alphabetical (r12 verdict #6). The r12
     // driver run showed 20 queries at >=1.5x driver-vs-builder minima, all
@@ -204,31 +50,34 @@ object Bench {
       .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .getOrElse(System.nanoTime())
     val runOrder = new scala.util.Random(seed)
-      .shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
+      .shuffle(queries.keys.toSeq.sorted)
     // Canary (r13 verdict #4): a FIXED cheap query (tpch_q6 — one scan +
     // filter + agg, ~0.1 s at sf0.1) timed once every CanaryEvery run
     // positions. Its series is a load thermometer sampled THROUGH the run:
     // a ≥1.5x flag whose ord window shows the canary inflated is machine
     // load (the r12 ord 31-36 / r13 ord 324-326 clusters), one with a flat
     // canary is code — decided by data already in the detail file instead
-    // of a manual ProbeQ round-trip per flag. One timed rep per point: the
-    // canary measures AMBIENT load, its own variance is the signal, and
+    // of a manual `Probe q` round-trip per flag. One timed rep per point:
+    // the canary measures AMBIENT load, its own variance is the signal, and
     // plan/codegen caches make re-execution cheap after the one warm run.
+    // A canary run that throws records no point.
     val CanaryEvery = 25
     val canaryName = "tpch_q6"
     val canary = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    val canaryFn = SparkEntry.queries.get(canaryName)
+    val canaryFn = queries.get(canaryName)
     canaryFn.foreach { f =>
-      try { run(f(spark, sfDir)) } catch { case _: Throwable => }
+      try { Harness.run(f(spark, sfDir)) } catch { case _: Throwable => }
     }
     def canaryPoint(ord: Int): Unit = canaryFn.foreach { f =>
       val t0 = System.nanoTime()
-      try { run(f(spark, sfDir)) } catch { case _: Throwable => }
-      canary += ((ord, (System.nanoTime() - t0) / 1e9))
+      try {
+        Harness.run(f(spark, sfDir))
+        canary += ((ord, (System.nanoTime() - t0) / 1e9))
+      } catch { case _: Throwable => }
     }
-    val firstPass = runOrder.zipWithIndex.map { case ((n, f), ord) =>
+    val firstPass = runOrder.zipWithIndex.map { case (n, ord) =>
       if (ord % CanaryEvery == 0) canaryPoint(ord)
-      measure(n, f)
+      measure(n)
     }
     canaryPoint(runOrder.size)
     // Self-isolation rerun (r11 verdict #5; widened r12 verdict #6):
@@ -244,89 +93,84 @@ object Bench {
     // with rerun series appended; "med_from" records the reps_s index the
     // published median's series starts at (0 = all reps; absent = no rerun
     // happened), so the median is always recomputable from the detail file
-    // (r12 ADVICE).
+    // (r12 ADVICE). A rerun that throws fails the query.
     val results = firstPass.map { r =>
-      if (!r._9) (r, -1)
+      if (!r.contended) (r, -1)
       else {
-        var combined = r._4
-        var minSoFar = r._3
-        var gc = r._6; var jit = r._7; var jitW = r._8
-        var ccMb = r._5
-        var flag = true
-        var medSeries = combined
+        var acc = r
+        var medSeries = r.repsS
         var medFrom = 0
         var attempts = 0
-        while (attempts < 2 && flag) {
-          val fresh = measure(r._1, SparkEntry.queries(r._1))
-          val from = combined.size
-          combined = combined ++ fresh._4
-          minSoFar = math.min(minSoFar, fresh._3)
-          gc += fresh._6; jit += fresh._7; jitW += fresh._8
-          // PEAK across all series, not last-rerun (r13 ADVICE): cc_mb
-          // exists to catch code-cache pressure, which the flagged query's
-          // FIRST contended series may have seen and the rerun not
-          ccMb = math.max(ccMb, fresh._5)
-          flag = fresh._9
-          if (!flag) { medSeries = fresh._4; medFrom = from }
-          else { medSeries = combined; medFrom = 0 }
+        while (attempts < 2 && acc.contended) {
+          val fresh = measure(r.name)
+          val from = acc.repsS.size
+          val combined = acc.repsS ++ fresh.repsS
+          if (fresh.contended || fresh.failed) { medSeries = combined; medFrom = 0 }
+          else { medSeries = fresh.repsS; medFrom = from }
+          // cc_mb is the PEAK across all series, not last-rerun (r13
+          // ADVICE): it exists to catch code-cache pressure, which the
+          // flagged query's FIRST contended series may have seen
+          acc = acc.copy(
+            min = if (fresh.repsS.isEmpty) acc.min else math.min(acc.min, fresh.min),
+            repsS = combined, ccMb = math.max(acc.ccMb, fresh.ccMb),
+            gcMs = acc.gcMs + fresh.gcMs, jitMs = acc.jitMs + fresh.jitMs,
+            jitWaitMs = acc.jitWaitMs + fresh.jitWaitMs,
+            contended = fresh.contended, error = fresh.error)
           attempts += 1
         }
-        val all = medSeries.sorted
-        val med =
-          if (all.size % 2 == 1) all(all.size / 2)
-          else (all(all.size / 2 - 1) + all(all.size / 2)) / 2
-        ((r._1, med, minSoFar, combined, ccMb, gc, jit, jitW, flag), medFrom)
+        (acc.copy(med = Harness.median(medSeries)), medFrom)
       }
     }
     def fmt(v: Double): String = f"$v%.3f"
-    val medFroms = results.map(_._2)
     val flat = results.map(_._1)
-    val total = if (flat.nonEmpty) flat.map(_._2).sum else 0.0
+    // Failed queries carry no time: they are counted in n_failed, marked
+    // "failed":true in the detail file, and left out of both totals.
+    val timed = flat.filterNot(_.failed)
+    val nFailed = flat.size - timed.size
+    val total = timed.map(_.med).sum
     // Sum of per-query MINIMA: the contention-robust companion number. The
     // min over reps is the best estimate of intrinsic query cost when the
     // host is intermittently loaded (the r05 driver run measured 8-13x on
     // exactly the high-parallelism queries while the same commit ran 40.8s
     // locally — see BENCH_HISTORY.md); medians remain the headline.
-    val totalMin = if (flat.nonEmpty) flat.map(_._3).sum else 0.0
+    val totalMin = timed.map(_.min).sum
     // Full per-query detail goes to a file; the stdout line must stay well
     // under the harness's 2000-char output-tail capture or it is unparseable
     // (the r01/r02 89-entry line overflowed the tail and parsed as null).
     // The printed "queries" map carries the slowest queries that fit a
     // ~1200-char budget; "detail" points at the complete map.
-    val nContended = flat.count(_._9)
+    val nContended = flat.count(_.contended)
     val detailPath = "BENCH_DETAIL.json"
-    val allQs = flat.zip(medFroms).zipWithIndex.map {
-      case (((k, med, min, raw, ccMb, gcMs, jitMs, jitWaitMs, contended),
-          medFrom), ord) =>
-        "\"" + k + "\":{\"med\":" + fmt(med) + ",\"min\":" + fmt(min) +
-          ",\"reps_s\":" + raw.map(fmt).mkString("[", ",", "]") +
-          ",\"ord\":" + ord +
-          (if (medFrom >= 0) ",\"med_from\":" + medFrom else "") +
-          ",\"cc_mb\":" + ccMb + ",\"gc_ms\":" + gcMs +
-          ",\"jit_ms\":" + jitMs + ",\"jit_wait_ms\":" + jitWaitMs +
-          (if (contended) ",\"contended\":true" else "") + "}"
+    val allQs = results.zipWithIndex.map { case ((m, medFrom), ord) =>
+      "\"" + m.name + "\":{\"med\":" + fmt(m.med) + ",\"min\":" + fmt(m.min) +
+        ",\"reps_s\":" + m.repsS.map(fmt).mkString("[", ",", "]") +
+        ",\"ord\":" + ord +
+        (if (medFrom >= 0) ",\"med_from\":" + medFrom else "") +
+        ",\"cc_mb\":" + m.ccMb + ",\"gc_ms\":" + m.gcMs +
+        ",\"jit_ms\":" + m.jitMs + ",\"jit_wait_ms\":" + m.jitWaitMs +
+        (if (m.contended) ",\"contended\":true" else "") +
+        (if (m.failed) ",\"failed\":true" else "") + "}"
     }.mkString("{", ",", "}")
-    val (ccEnd, ccMax) = codeCache()
-    val jvmJson = s"""{"cc_used_mb":${ccEnd >> 20},"cc_max_mb":${ccMax >> 20},"gc_s":${fmt(gcMillis() / 1000.0)},"jit_s":${fmt(jitMillis() / 1000.0)}}"""
+    val (ccEnd, ccMax) = Harness.codeCache()
+    val jvmJson = s"""{"cc_used_mb":${ccEnd >> 20},"cc_max_mb":${ccMax >> 20},"gc_s":${fmt(Harness.gcMillis() / 1000.0)},"jit_s":${fmt(JitQuiesce.jitMillis() / 1000.0)}}"""
     val canaryJson = "{\"q\":\"" + canaryName + "\",\"points\":" +
       canary.map { case (o, s) => s"""{"ord":$o,"s":${fmt(s)}}""" }
         .mkString("[", ",", "]") + "}"
     try {
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
-      try w.println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_contended":$nContended,"bench_seed":$seed,"jvm":$jvmJson,"canary":$canaryJson,"queries":$allQs,"sf":"$sfDir"}""")
+      try w.println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_contended":$nContended,"n_failed":$nFailed,"bench_seed":$seed,"jvm":$jvmJson,"canary":$canaryJson,"queries":$allQs,"sf":"$sfDir"}""")
       finally w.close()
     } catch { case _: Throwable => }
     val budget = 1200
-    val slowFirst = flat.sortBy(-_._2)
-    val picked = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    val picked = scala.collection.mutable.ArrayBuffer.empty[Measurement]
     var used = 0
-    slowFirst.foreach { case (k, med, _, _, _, _, _, _, _) =>
-      val entryLen = k.length + fmt(med).length + 4
-      if (used + entryLen <= budget) { picked += ((k, med)); used += entryLen }
+    timed.sortBy(-_.med).foreach { m =>
+      val entryLen = m.name.length + fmt(m.med).length + 4
+      if (used + entryLen <= budget) { picked += m; used += entryLen }
     }
-    val qs = picked.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val qs = picked.sortBy(_.name).map(m => "\"" + m.name + "\":" + fmt(m.med))
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_queries":${results.size},"n_contended":$nContended,"bench_seed":$seed,"jvm":$jvmJson,"queries":$qs,"detail":"$detailPath","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"value_min":${fmt(totalMin)},"unit":"sec","mode":"warm","reps":$reps,"n_queries":${results.size},"n_contended":$nContended,"n_failed":$nFailed,"bench_seed":$seed,"jvm":$jvmJson,"queries":$qs,"detail":"$detailPath","sf":"$sfDir"}""")
     spark.stop()
   }
 }

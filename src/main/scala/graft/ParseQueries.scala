@@ -49,7 +49,7 @@ object ParseQueries {
     // key, parse ABOVE the exchange. The old shape (fanOut → parse →
     // orderBy) paid the whole regex chain TWICE — the final orderBy's
     // range exchange samples its child by executing it, so the sampling
-    // pass evaluated the full projection (ProbeStages: 7.8 s of executor
+    // pass evaluated the full projection (`Probe stages`: 7.8 s of executor
     // CPU in the sample stage vs 10.8 s in the sort stage at 32c). An
     // explicit repartitionByRange + sortWithinPartitions on the unique key
     // produces the identical total order (range ownership + local sort),

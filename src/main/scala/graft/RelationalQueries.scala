@@ -923,7 +923,7 @@ object RelationalQueries {
     * TPC-H Q1 shape. Partial (map-side) agg + final agg happen automatically;
     * the only shuffle carries 6 groups. Decimal sums keep the hash stable.
     * (r15 examined: a projected fanOut to parallelize the decimal partial
-    * agg measured NEUTRAL — ProbeQ 1.30 med vs the 1.15 bench baseline; the
+    * agg measured NEUTRAL — `Probe q` 1.30 med vs the 1.15 bench baseline; the
     * round-robin exchange's serial write costs what the cores-wide agg
     * saves at this size — declined, single-scan shape kept.) */
   private def aggSalaryStats(s: SparkSession, d: String): DataFrame =

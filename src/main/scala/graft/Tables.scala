@@ -23,7 +23,7 @@ object Tables {
     * guide §6/§1.2): `spark.read.parquet` re-infers the footer schema
     * (90-100 ms) AND re-resolves the DataSource — file listing, relation
     * and Dataset construction, analysis — on every call (~13 ms even with
-    * an explicit schema; tools/ProbeRead.scala), paid per table reference
+    * an explicit schema; `graft.tools.Probe read`), paid per table reference
     * per timed rep across all 346 bench queries. A production table is
     * resolved ONCE in a catalog and referenced by name; this cache is that
     * catalog behavior for the path-based testdata: it holds the analyzed
@@ -83,9 +83,22 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Runtime confs every entry point applies (idempotent). Kept here so
-    * Verify/Bench/tests all execute with identical semantics. */
-  def tune(spark: SparkSession): SparkSession = {
+  /** Sessions [[tune]] has installed into. Weak keys (the Boolean values
+    * hold no reference back), so a stopped session can be collected. */
+  private val tuned = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** Runtime confs and native functions every entry point needs, installed
+    * ONCE per session (every [[table]] call reaches it, so sessions built
+    * outside [[Harness]] get it too). Kept here so Verify/Bench/tests all
+    * execute with identical semantics; a conf the caller sets after the
+    * install is left alone. */
+  def tune(spark: SparkSession): SparkSession = tuned.synchronized {
+    if (!tuned.contains(spark)) { install(spark); tuned.add(spark) }
+    spark
+  }
+
+  private def install(spark: SparkSession): Unit = {
     // Oracle comparisons read our written parquet with DuckDB/pyarrow:
     // INT96 is legacy — write standard micros.
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -98,10 +111,9 @@ object Tables {
     // Native functions for sessions built without spark.sql.extensions —
     // the SAME GraftFunctions.all list the extensions entry point consumes
     // (r10: two hand-maintained lists had drifted; extension sessions
-    // lacked four functions). Register-once guard: tune() runs on every
-    // table() call, and a blind re-register logs a "replaced a previously
-    // registered function" WARN per call — hundreds of lines of noise in a
-    // bench run.
+    // lacked four functions). Register-once guard: the registry may
+    // already hold them (an extensions session), and a blind re-register
+    // logs a "replaced a previously registered function" WARN.
     val reg = spark.sessionState.functionRegistry
     GraftFunctions.all.foreach { case (id, info, builder) =>
       if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
@@ -121,7 +133,6 @@ object Tables {
       exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.PruneColumnsThroughAsOfJoin
     if (!exp.extraOptimizations.contains(graft.plans.RewriteBinnedRangeJoin))
       exp.extraOptimizations = exp.extraOptimizations :+ graft.plans.RewriteBinnedRangeJoin
-    spark
   }
 
   /** The safety blocklist behind `blocklist_match` — deliberately tiny:
@@ -140,12 +151,4 @@ object Tables {
     * and its predicate. */
   def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** Events with ts bucketed to whole seconds — convenience for queries whose
-    * compared output includes a time column (sub-second precision differs in
-    * representation between engines; whole seconds are unambiguous). */
-  def eventsSec(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    events(s, d).withColumn("ts_sec", date_trunc("second", org.apache.spark.sql.functions.col("ts")))
-  }
 }

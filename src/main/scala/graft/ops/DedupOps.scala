@@ -312,7 +312,7 @@ object DedupOps {
     * ranking window input, sizes, both verify-join sides — ran cores-wide
     * regardless of corpus size. At sf0.1 the containment family is 250
     * docs / 13k token rows, and 32 concurrent ~nothing tasks per stage
-    * measured SLOWER than 8 (PERF_r14 scaling ratio 0.30; ProbeStages:
+    * measured SLOWER than 8 (PERF_r14 scaling ratio 0.30; `Probe stages`:
     * stage run-time 113 ms at 8 tasks → 13,612 ms at 32 — scheduler/lock
     * overhead, not compute). The corpus size is already OBSERVED in the
     * checkpoint job, so the fix is free: coalesce (narrow, no shuffle;

@@ -56,7 +56,7 @@ object OrderedOps {
     // totals pass over INTERNAL rows (queryExecution.toRdd): one job, no
     // shuffle, no InternalRow→Row conversion — a groupBy(spark_partition_id)
     // agg was measured SLOWER than even the old .rdd pass here because it
-    // adds an exchange + AQE stage for P metadata rows (ProbeOrdered)
+    // adds an exchange + AQE stage for P metadata rows (r14 A/B, SF1.md §8)
     val totals = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       val acc = new Array[Long](n)
       it.foreach { r =>

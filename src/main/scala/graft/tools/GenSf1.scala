@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** sf1 testdata amplifier (dev tool, not part of the query surface).
   *
@@ -58,12 +60,7 @@ object GenSf1 {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val only: Option[Set[String]] =
       args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     def raw(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")
 

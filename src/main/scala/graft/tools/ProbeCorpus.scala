@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.ops.DedupOps
 
 /** Dev probe: the dedup family's CANDIDATE ECONOMICS on a given corpus —
@@ -31,12 +30,7 @@ object ProbeCorpus {
     val prodOnly = rawArgs.contains("--prod-only")
     val cutsOnly = rawArgs.contains("--cuts-only") || prodOnly
     val args = rawArgs.filterNot(a => a == "--cuts-only" || a == "--prod-only")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Harness.session()
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -58,7 +52,7 @@ object ProbeCorpus {
         f"family_pairs_naive=${nFam * (nFam - 1) / 2}%,d")
 
       def report(name: String, cand: => Long, emit: => Long): Unit = {
-        // warm once (codegen), then time — same reasoning as ProbeQ
+        // warm once (codegen), then time — same reasoning as `Probe q`
         val (c, _) = timed(cand)
         val (_, tc) = timed(cand)
         val (e, _) = timed(emit)
@@ -87,7 +81,7 @@ object ProbeCorpus {
       }
       // r14: before/after the PPJoin+ suffix filter, candidate counts AND
       // full-pipeline emit timings both ways IN ONE JVM — cross-window
-      // ProbeQ comparisons on this box drift 1.5-2x, so the suffix
+      // `Probe q` comparisons on this box drift 1.5-2x, so the suffix
       // cost/benefit ledger (array build + probe joins vs saved verify
       // rows) is only honest measured back-to-back
       report("prefix(no-suffix)",

@@ -2,11 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.streaming.{IndexDeltaSink, StreamOps}
 
 /** Streaming rehearsal at sf1 state volume (r11 verdict #2): the sf1 gate
@@ -74,12 +74,7 @@ object StreamSf1 {
     val docsDir = args.lift(2).getOrElse(
       if (Files.exists(Paths.get("/root/repo/testdata-zipf/sf1")))
         "/root/repo/testdata-zipf/sf1" else sfDir)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Harness.session()
     import spark.implicits._
     val report = new StringBuilder
     def log(s: String): Unit = { println(s"[stream-sf1] $s"); report.append(s).append('\n') }

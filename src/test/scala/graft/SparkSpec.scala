@@ -12,17 +12,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Tables.tune(s)
-    s
-  }
+  /** Fixed at four cores so results do not depend on the host's core count. */
+  lazy val session: SparkSession = Harness.session(4)
 }

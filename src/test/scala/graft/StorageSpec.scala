@@ -77,8 +77,10 @@ class StorageSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     // the in-memory catalog forgets tables across JVMs but the warehouse
     // directories persist — clear them or CREATE fails on location-exists
+    val warehouse = new java.io.File(
+      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
     for (t <- Seq("b_orders", "b_lineitem")) {
-      val p = new java.io.File(s"/tmp/graft-warehouse/$t")
+      val p = new java.io.File(warehouse, t)
       if (p.exists()) {
         java.nio.file.Files.walk(p.toPath)
           .sorted(java.util.Comparator.reverseOrder())

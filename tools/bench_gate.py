@@ -14,7 +14,8 @@ A query regresses when BOTH hold (guards against flagging sub-noise queries):
 Usage:
   python3 tools/bench_gate.py BENCH_DETAIL.json             # gate vs baseline
   python3 tools/bench_gate.py BENCH_DETAIL.json --update    # accept as baseline
-Exit 0 = no regressions; exit 1 = regressions listed on stdout.
+Exit 0 = no regressions; exit 1 = regressions or failed queries listed on
+stdout.
 """
 import json
 import sys
@@ -25,11 +26,19 @@ ABS_FLOOR = 0.3
 
 
 def load(path):
+    """Per-query minima; queries marked "failed" carry no time and are
+    left out (main() reports them)."""
     with open(path) as f:
         d = json.load(f)
     qs = d.get("queries", d)
     return {k: v["min"] if isinstance(v, dict) else float(v)
-            for k, v in qs.items()}
+            for k, v in qs.items()
+            if not (isinstance(v, dict) and v.get("failed"))}
+
+
+def failed(detail):
+    return sorted(k for k, v in detail.get("queries", {}).items()
+                  if isinstance(v, dict) and v.get("failed"))
 
 
 def canary_drift(detail, q):
@@ -76,7 +85,8 @@ def main():
             regressions.append((q, b, t))
         elif b > THRESHOLD * t and b - t > ABS_FLOOR:
             improved.append((q, b, t))
-    removed = sorted(set(base) - set(new))
+    broken = failed(new_detail)
+    removed = sorted(set(base) - set(new) - set(broken))
     for q, b, t in regressions:
         cd = canary_drift(new_detail, q)
         note = ""
@@ -86,6 +96,8 @@ def main():
                        else "canary flat -> likely code")
             note = f"  [canary x{drift:.2f} @ ord {ord_}: {verdict}]"
         print(f"REGRESSION {q}: {b:.2f}s -> {t:.2f}s ({t / b:.1f}x){note}")
+    for q in broken:
+        print(f"FAILED     {q}: threw during the bench, no time recorded")
     for q, b, t in improved:
         print(f"improved   {q}: {b:.2f}s -> {t:.2f}s")
     if added:
@@ -99,7 +111,7 @@ def main():
     # Drift-signature aid (BENCH_HISTORY r09b/c/e/f, r10b): machine drift
     # moves unchanged queries in BOTH directions between runs. Count the
     # softer >1.3x movers each way so the adjudicator sees the signature in
-    # the gate output itself; flags still require the isolated-ProbeQ +
+    # the gate output itself; flags still require the isolated `Probe q` +
     # git-diff protocol before any fix is filed.
     up = sum(1 for q, t in new.items()
              if q in base and t > 1.3 * base[q] and t - base[q] > 0.1)
@@ -108,9 +120,9 @@ def main():
     if regressions:
         print(f"drift check: {up} quer{'y' if up == 1 else 'ies'} up >1.3x, "
               f"{down} down >1.3x — both-directions movement with unchanged "
-              f"code suggests machine drift (adjudicate: isolated ProbeQ + "
+              f"code suggests machine drift (adjudicate: isolated `Probe q` + "
               f"git diff per flagged query)")
-    return 1 if regressions else 0
+    return 1 if regressions or broken else 0
 
 
 if __name__ == "__main__":

@@ -4,7 +4,7 @@
 # sbt's project lock — so a long bench and an sbt compile/test can't queue on
 # each other during optimization work. Usage:
 #   tools/run_graft.sh graft.Bench
-#   tools/run_graft.sh graft.tools.ProbePhases /root/testdata/sf0.1 q1 q2
+#   tools/run_graft.sh graft.tools.Probe phases <sfDir> q1 q2
 # Env passthrough: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM, ...
 set -euo pipefail
 cd "$(dirname "$0")/.."
