@@ -82,9 +82,12 @@ object Harness {
     * inherited up to 163 predecessors' worth of retained blocks — the
     * likely cause of the r06 full-suite 5.6x on knn_q8_rescore while
     * the same commit ran 0.4s in isolation. Unpersist synchronously,
-    * clear any cached plans, drop leaked spark.graft.* optimizer knobs
-    * (no query's result may depend on which queries ran before it), and
-    * give the cleaner one GC tick. */
+    * clear any cached plans and drop leaked spark.graft.* optimizer knobs
+    * (no query's result may depend on which queries ran before it). The
+    * timing callers ([[measure]], `Probe phases`) follow it with a
+    * `System.gc()`, the cleaner's GC tick, so every timed query starts
+    * from a collected heap; Verify, which times nothing, does not pay the
+    * full GC per query. */
   def resetState(spark: SparkSession): Unit = {
     try {
       spark.sparkContext.getPersistentRDDs.values
@@ -92,7 +95,6 @@ object Harness {
       spark.catalog.clearCache()
       spark.conf.getAll.keys.filter(_.startsWith("spark.graft."))
         .foreach(spark.conf.unset)
-      System.gc()
     } catch { case _: Throwable => }
   }
 
@@ -140,6 +142,7 @@ object Harness {
   def measure(spark: SparkSession, name: String, reps: Int)
       (build: => DataFrame): Measurement = {
     resetState(spark)
+    System.gc()
     var error: Option[String] = None
     def attempt(): Option[Double] = {
       val t0 = System.nanoTime()

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.UpsertOps
 
@@ -61,9 +62,21 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
       Paths.get(tableDir, new String(Files.readAllBytes(marker), "UTF-8").trim)
     }.filter(Files.exists(_))
 
-  /** Current table contents ("SELECT * FROM target"). */
+  /** The directory this instance committed last, with the schema it wrote
+    * there. */
+  @volatile private var lastCommit: Option[(String, StructType)] = None
+
+  /** Current table contents ("SELECT * FROM target"). A directory this
+    * instance committed is read with the schema it wrote, skipping the
+    * parquet footer inference job; any other directory is inferred, since
+    * a stored schema may differ from the batch schema ([[IndexDeltaSink]]
+    * stores `term, df, cf, postings`). */
   def table(spark: SparkSession): Option[DataFrame] =
-    currentDataDir().map(p => spark.read.parquet(p.toString))
+    currentDataDir().map { p =>
+      lastCommit.collect {
+        case (dir, schema) if dir == p.getFileName.toString => spark.read.schema(schema)
+      }.getOrElse(spark.read).parquet(p.toString)
+    }
 
   /** The MERGE semantics of one batch against the standing table — override
     * for non-upsert targets (e.g. [[IndexDeltaSink]]'s additive postings
@@ -83,18 +96,18 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
     val spark = batch.sparkSession
     val previous = currentDataDir()
     val merged = merge(table(spark), batch)
-    // materialize before writing — the plan still reads the previous dir
-    val rows = merged.localCheckpoint()
     // per-ATTEMPT directory (r10 review): two JVMs committing the same id
     // (zombie + restarted driver) used to race inside ONE data-b<id>
     // directory — overwrite deleting the other's in-flight task files —
     // and both markers "succeeded" over interleaved garbage. Unique dirs
     // make every attempt's output self-consistent; the marker names the
     // winning attempt's dir. A crashed attempt's dir is unreferenced
-    // garbage, swept when its batch's superseding commit lands.
+    // garbage, swept when its batch's superseding commit lands. The plan
+    // reads the previous dir while it writes the fresh one, and the
+    // previous dir is deleted only after this attempt's marker commit.
     val newDirName =
       s"data-b$batchId-${java.util.UUID.randomUUID().toString.take(8)}"
-    rows.write.mode("overwrite").parquet(s"$tableDir/$newDirName")
+    merged.write.mode("overwrite").parquet(s"$tableDir/$newDirName")
     // commit point: temp file + rename publishes data path and batch id in
     // one step; NO replace-existing — the loser of a same-id race gets
     // FileAlreadyExists, discards its own dir, and defers to the winner's
@@ -126,6 +139,7 @@ class JdbcShapedSink(tableDir: String, keys: Seq[String], versionCol: String) {
       deleteQuietly(Paths.get(tableDir, newDirName))
       return
     }
+    lastCommit = Some((newDirName, merged.schema))
     // the superseded directory is now unreferenced; reclaim best-effort
     previous.filter(_.getFileName.toString != newDirName).foreach(deleteQuietly)
     sweepOrphans()

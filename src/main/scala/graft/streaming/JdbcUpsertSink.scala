@@ -28,7 +28,10 @@ import org.apache.spark.sql.types._
   *    duplicates): [[appendIgnoreDupes]] inserts staging rows whose UNIQUE
   *    tuple is absent (NOT EXISTS on the declared constraint subset) in one
   *    set-based statement — the semantics of the reference's row-at-a-time
-  *    try/except, without paying a round-trip per row.
+  *    try/except, without paying a round-trip per row. The subset carries
+  *    a non-unique index, as the reference's UNIQUE constraint is an index
+  *    in SQL Server, so each staged row's NOT EXISTS is an index probe
+  *    rather than a scan of the whole fact history.
   *
   * Exactly-once under foreachBatch's at-least-once replay: a `_ledger`
   * table keyed by batch id is written IN THE SAME TRANSACTION as the MERGE.
@@ -191,12 +194,26 @@ class JdbcUpsertSink(url: String, table: String, keys: Seq[String],
     * rejected there). Defaults to the full tuple, the safe generalization
     * when no constraint subset is declared. Within-batch conflicts on the
     * unique tuple elect a deterministic winner (lowest content hash), so
-    * replays insert the same row. */
+    * replays insert the same row.
+    *
+    * The NOT EXISTS probe runs through a non-unique index over `uc`,
+    * created idempotently here (a table created without one gains it on
+    * its next append). That index bounds the unique tuple's size by
+    * Derby's index-key ceiling: a unique value of 16,000 chars appends,
+    * one of 32,000 chars fails the INSERT with `XSCB6` and the transaction
+    * rolls back — loudly, the analog of SQL Server's key-size limit on the
+    * reference's UNIQUE constraint. Columns outside `uc` are not indexed
+    * and keep the `stringWidth` limit. */
   def appendIgnoreDupes(batch: DataFrame,
       uniqueCols: Seq[String] = Seq.empty): Unit = synchronized {
     val uc = if (uniqueCols.nonEmpty) uniqueCols
       else batch.schema.fieldNames.toSeq
     ensureTablesNoKey(batch.schema)
+    // non-unique: the NOT EXISTS below stays the enforcement, and it
+    // compares with `=`, under which tuples holding a NULL never collide —
+    // a unique index would reject rows this contract admits
+    withConn(createQuietly(_,
+      s"CREATE INDEX ${q(table + "_uc")} ON ${q(table)} (${uc.map(q).mkString(", ")})"))
     val attempt = java.util.UUID.randomUUID().toString
     // lowest content hash wins (the documented contract — kept asc while
     // the upsert path uses desc; both now run through the ONE shared
@@ -229,7 +246,8 @@ class JdbcUpsertSink(url: String, table: String, keys: Seq[String],
   /** DDL variant without a primary key — the unique-tuple check runs in
     * [[appendIgnoreDupes]]'s INSERT itself (NOT EXISTS on the declared
     * unique subset under SERIALIZABLE isolation), so the table needs no
-    * constraint of its own; staging carries the attempt tag. */
+    * constraint of its own; [[appendIgnoreDupes]] adds the non-unique
+    * index that check probes. Staging carries the attempt tag. */
   def ensureTablesNoKey(schema: StructType): Unit = withConn { c =>
     val cols = schema.fields
       .map(f => s"${q(f.name)} ${sqlType(f.dataType)}").mkString(", ")

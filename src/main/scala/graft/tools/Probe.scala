@@ -69,6 +69,7 @@ object Probe {
     println("[phases] query                          total_s  build_ms  anal_ms  opt_ms  phys_ms  exec_s  jobs")
     lookup(sweep).foreach { case (n, q) =>
       Harness.resetState(spark)
+      System.gc()
       // a failing query is reported and skipped, never aborts the sweep
       val warmed =
         try { Harness.run(q.build(spark, d)); true }

@@ -87,6 +87,49 @@ class JdbcShapedSinkSpec extends SparkSpec {
     assert(read() == Map(1L -> ((10L, "a")), 2L -> ((20L, "b"))))
   }
 
+  /** Jobs `f` runs under a fresh job group. A sentinel job started after
+    * `f` is seen by the status store only once every earlier job start has
+    * been delivered, so the count is complete when it is read. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group, false)
+    try f finally sc.clearJobGroup()
+    sc.setJobGroup(group + "-sentinel", "sentinel", false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(group + "-sentinel").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("a non-first batch runs 2 jobs (shuffle map + write) and pins no RDD") {
+    val (sink, read) = mkSink()
+    sink.writeBatch(
+      Seq((1L, 10L, "a"), (2L, 10L, "b")).toDF("job_id", "scraped_at", "payload"), 0L)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val b1 = Seq((2L, 20L, "b2"), (3L, 10L, "c")).toDF("job_id", "scraped_at", "payload")
+    assert(jobsOf(sink.writeBatch(b1, 1L)) == 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
+    assert(read() == Map(1L -> ((10L, "a")), 2L -> ((20L, "b2")), 3L -> ((10L, "c"))))
+  }
+
+  test("a fresh sink over another instance's commits reads the same table " +
+      "and merges on top of it") {
+    val (sink, read) = mkSink()
+    sink.writeBatch(
+      Seq((1L, 10L, "a"), (2L, 10L, "b")).toDF("job_id", "scraped_at", "payload"), 0L)
+    val own = sink.table(spark).get
+    val fresh = new JdbcShapedSink(lastDir, Seq("job_id"), "scraped_at")
+    val inferred = fresh.table(spark).get
+    assert(inferred.schema == own.schema)
+    assert(inferred.collect().toSet == own.collect().toSet)
+    fresh.writeBatch(
+      Seq((1L, 20L, "a2"), (3L, 10L, "c")).toDF("job_id", "scraped_at", "payload"), 1L)
+    assert(read() == Map(1L -> ((20L, "a2")), 2L -> ((10L, "b")), 3L -> ((10L, "c"))))
+    assert(fresh.table(spark).get.schema == own.schema)
+  }
+
   test("attached to a real stream: full source replay on a fresh checkpoint adds nothing") {
     val (sink, read) = mkSink()
     val rows = Seq((1L, 10L, "a"), (2L, 10L, "b"), (2L, 10L, "b"), (3L, 10L, "c"))

@@ -138,6 +138,75 @@ class JdbcUpsertSinkSpec extends SparkSpec {
       (3L, "sql", "lang")), s"got $rows")
   }
 
+  /** Non-unique indexes on `table`, each as its column list in key order. */
+  private def indexes(url: String, table: String): Seq[Seq[String]] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.getMetaData.getIndexInfo(null, null, table, false, false)
+      val cols = scala.collection.mutable.ArrayBuffer.empty[(String, Int, String)]
+      while (rs.next())
+        if (rs.getString("INDEX_NAME") != null)
+          cols += ((rs.getString("INDEX_NAME"), rs.getInt("ORDINAL_POSITION"),
+            rs.getString("COLUMN_NAME")))
+      cols.groupBy(_._1).values.map(_.sortBy(_._2).map(_._3).toSeq).toSeq
+    } finally c.close()
+  }
+
+  test("appendIgnoreDupes indexes the unique columns, once, also on a " +
+      "table created without the index") {
+    val url = "jdbc:derby:memory:g" +
+      java.util.UUID.randomUUID.toString.replace("-", "") + ";create=true"
+    val uc = Seq("job_id", "skill")
+    val sink = new JdbcUpsertSink(url, "skills_ix", uc, "job_id")
+    val b0 = Seq(("j1", "python", "lang"), ("j2", "sql", "lang"))
+      .toDF("job_id", "skill", "category")
+    sink.appendIgnoreDupes(b0, uc)
+    assert(indexes(url, "skills_ix") == Seq(uc))
+    sink.appendIgnoreDupes(b0, uc)
+    assert(indexes(url, "skills_ix") == Seq(uc), "second append re-indexed")
+    assert(sink.table(spark).count() == 2)
+
+    // a job_skills table from before the index: the next append adds it
+    // and still rejects the rows already there
+    val c = DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      st.execute("CREATE TABLE \"job_skills\" (\"job_id\" VARCHAR(32672), " +
+        "\"skill\" VARCHAR(32672))")
+      st.execute("INSERT INTO \"job_skills\" VALUES ('j1', 'python')")
+      st.close()
+    } finally c.close()
+    assert(indexes(url, "job_skills").isEmpty)
+    val old = new JdbcUpsertSink(url, "job_skills", uc, "job_id")
+    old.appendIgnoreDupes(
+      Seq(("j1", "python"), ("j1", "spark")).toDF("job_id", "skill"), uc)
+    assert(indexes(url, "job_skills") == Seq(uc))
+    assert(old.table(spark).collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      Set(("j1", "python"), ("j1", "spark")))
+    assert(old.table(spark).count() == 2)
+  }
+
+  test("a 16,000-char unique value appends through the index and is " +
+      "de-duplicated on replay; 32,000 chars fails loudly (XSCB6)") {
+    val url = "jdbc:derby:memory:g" +
+      java.util.UUID.randomUUID.toString.replace("-", "") + ";create=true"
+    val uc = Seq("job_id", "skill")
+    val sink = new JdbcUpsertSink(url, "wide_uc", uc, "job_id")
+    val wide = Seq(("j1", "s" * 16000), ("j2", "sql")).toDF("job_id", "skill")
+    sink.appendIgnoreDupes(wide, uc)
+    sink.appendIgnoreDupes(wide, uc)
+    val got = sink.table(spark).collect().map(r => (r.getString(0), r.getString(1)))
+    assert(got.length == 2 && got.toSet == Set(("j1", "s" * 16000), ("j2", "sql")))
+
+    val e = intercept[java.sql.SQLException] {
+      sink.appendIgnoreDupes(Seq(("j3", "s" * 32000)).toDF("job_id", "skill"), uc)
+    }
+    val states = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collect { case s: java.sql.SQLException => s.getSQLState }.toSeq
+    assert(states.contains("XSCB6"), s"expected XSCB6, got $states")
+    assert(sink.table(spark).count() == 2, "a failed append must roll back")
+  }
+
   test("payloads longer than 500 chars survive the staging insert " +
       "(width is a constructor knob, default Derby max)") {
     val url = "jdbc:derby:memory:g" +
